@@ -1,7 +1,7 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.io.{ByteArrayOutputStream, EOFException, IOException}
+import java.util.zip.{CRC32, DataFormatException, Deflater, GZIPOutputStream, Inflater, ZipException}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
@@ -21,10 +21,48 @@ import org.apache.spark.unsafe.types.UTF8String
  * (a static-method call keeps them inside whole-stage codegen — no
  * CodegenFallback, no interpreted row boundary in the hot path).
  *
+ * Decompression is a per-row kernel with no per-row setup: it parses the
+ * gzip member header itself (RFC 1952), inflates the raw deflate data with
+ * one `Inflater(nowrap = true)` per thread, `reset()` on entry, into a
+ * per-thread output buffer, checks the trailer, and returns an exact-length
+ * copy. A `GZIPInputStream` per row would instead pay for a new native
+ * inflater (and its Cleaner registration), a read buffer and a growing
+ * output stream on every row. Every check `GZIPInputStream` makes is kept:
+ * magic and method, FEXTRA/FNAME/FCOMMENT/FHCRC, trailer CRC-32 and ISIZE,
+ * truncated input fails, concatenated members are decoded and trailing
+ * garbage after a member is ignored (with the same tail-length rule).
+ *
  * Static JVM methods so generated code can call them directly.
  */
 object GzipCodec extends Serializable {
   private final val BufferSize = 8192
+
+  /** Size of the per-thread output buffer between rows: it doubles while a
+    * row inflates past it and is put back to this size after that row, so
+    * one oversized payload does not pin its memory to the thread. */
+  private[functions] final val RetainedBufferSize = 8192
+  // the largest array the JVM reliably allocates
+  private final val MaxArraySize = Int.MaxValue - 8
+
+  private final val FHCRC = 2
+  private final val FEXTRA = 4
+  private final val FNAME = 8
+  private final val FCOMMENT = 16
+  private final val HeaderSize = 10
+  private final val TrailerSize = 8
+
+  private final class InflateState {
+    val inflater = new Inflater(true)
+    val crc = new CRC32
+    var out = new Array[Byte](RetainedBufferSize)
+    val probe = new Array[Byte](1)
+  }
+
+  // one per task thread; never shared, so no locking
+  private val state = ThreadLocal.withInitial[InflateState](() => new InflateState)
+
+  /** Capacity of this thread's output buffer as kept between rows. */
+  private[functions] def retainedBufferCapacity: Int = state.get.out.length
 
   def compress(plain: Array[Byte]): Array[Byte] = {
     val bos = new ByteArrayOutputStream(plain.length.max(64))
@@ -34,40 +72,120 @@ object GzipCodec extends Serializable {
     bos.toByteArray
   }
 
-  /** Throws UncheckedIOException-style RuntimeException on corrupt input —
-    * the reference's fail-the-export policy
-    * (service/ParquetConversionService.java:109-112).
+  /** Throws an IOException on corrupt input — the reference's
+    * fail-the-export policy (service/ParquetConversionService.java:109-112).
     *
     * `maxBytes` bounds the INFLATED size: gzip ratios reach ~1000×, so at
     * corpus scale one hostile (or merely pathological) high-ratio payload
     * would otherwise balloon into an executor-killing allocation. The
     * reference never guards (util/GzipUtil.java:19-31 — it only ever
     * inflates its own trusted writes); an engine ingesting 100 TB of
-    * third-party bytes must. Strict mode throws (this method); lenient
-    * maps oversized, like corrupt, to null. */
+    * third-party bytes must. The bound is enforced as the output grows
+    * (ISIZE is never trusted for an allocation). Strict mode throws (this
+    * method); lenient maps oversized, like corrupt, to null. */
   def decompress(gzipped: Array[Byte], maxBytes: Long): Array[Byte] = {
-    val in = new GZIPInputStream(new ByteArrayInputStream(gzipped), BufferSize)
+    val st = state.get
+    val inf = st.inflater
+    val budget = math.max(maxBytes, 0L)
+    var buf = st.out
     try {
-      // initial-capacity hint only (the stream grows as needed): clamp —
-      // length * 3 wraps negative past ~715 MB input and a negative
-      // capacity would reject a legitimately large payload with an
-      // unrelated error instead of the documented maxBytes policy
-      val sizeHint = math.min(gzipped.length.toLong * 3 + 64, Int.MaxValue - 8).toInt
-      val out = new ByteArrayOutputStream(sizeHint)
-      val buf = new Array[Byte](BufferSize)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (n > 0) {
-          if (out.size().toLong + n > maxBytes)
-            throw new java.io.IOException(
+      var len = 0
+      var member = readHeader(gzipped, 0, st.crc)
+      var more = true
+      while (more) {
+        inf.reset()
+        inf.setInput(gzipped, member, gzipped.length - member)
+        val memberStart = len
+        while (!inf.finished()) {
+          val limit = math.min(buf.length.toLong, budget).toInt
+          if (len < limit) len += inflate(inf, buf, len, limit - len)
+          else if (len >= budget) {
+            // full at exactly the budget: over it only if more output follows
+            if (inflate(inf, st.probe, 0, 1) > 0) throw new IOException(
               s"gzip output exceeds maxBytes=$maxBytes (input ${gzipped.length} bytes)")
-          out.write(buf, 0, n)
+          } else if (buf.length < MaxArraySize) {
+            buf = java.util.Arrays.copyOf(buf,
+              math.min(math.min(buf.length * 2L, budget), MaxArraySize.toLong).toInt)
+          } else throw new IOException(
+            s"gzip output exceeds the largest array (input ${gzipped.length} bytes)")
         }
-        n = in.read(buf)
+        val trailer = gzipped.length - inf.getRemaining
+        if (trailer + TrailerSize > gzipped.length)
+          throw new EOFException("Unexpected end of GZIP trailer")
+        st.crc.reset()
+        st.crc.update(buf, memberStart, len - memberStart)
+        if (uint32(gzipped, trailer) != st.crc.getValue ||
+            uint32(gzipped, trailer + 4) != (inf.getBytesWritten & 0xffffffffL))
+          throw new ZipException("Corrupt GZIP trailer")
+        // GZIPInputStream's rule: a tail longer than 18 bytes is read as a
+        // further member if its header parses; anything else is ignored
+        val tail = trailer + TrailerSize
+        more = false
+        if (gzipped.length - tail > 18) {
+          try { member = readHeader(gzipped, tail, st.crc); more = true }
+          catch { case _: IOException => }
+        }
       }
-      out.toByteArray
-    } finally in.close()
+      java.util.Arrays.copyOf(buf, len)
+    } finally {
+      st.out = if (buf.length > RetainedBufferSize) new Array[Byte](RetainedBufferSize) else buf
+    }
   }
+
+  /** Parses the gzip member header at `start` and returns the offset of its
+    * deflate data. */
+  private def readHeader(b: Array[Byte], start: Int, crc: CRC32): Int = {
+    def need(end: Int): Unit =
+      if (end > b.length) throw new EOFException("Unexpected end of GZIP header")
+    def skipZeroTerminated(from: Int): Int = {
+      var p = from
+      while (p < b.length && b(p) != 0) p += 1
+      need(p + 1)
+      p + 1
+    }
+    need(start + 2)
+    if (uint16(b, start) != 0x8b1f) throw new ZipException("Not in GZIP format")
+    need(start + 3)
+    if ((b(start + 2) & 0xff) != Deflater.DEFLATED)
+      throw new ZipException("Unsupported compression method")
+    need(start + HeaderSize)
+    val flg = b(start + 3) & 0xff
+    var p = start + HeaderSize
+    if ((flg & FEXTRA) != 0) {
+      need(p + 2)
+      p += 2 + uint16(b, p)
+      need(p)
+    }
+    if ((flg & FNAME) != 0) p = skipZeroTerminated(p)
+    if ((flg & FCOMMENT) != 0) p = skipZeroTerminated(p)
+    if ((flg & FHCRC) != 0) {
+      need(p + 2)
+      crc.reset()
+      crc.update(b, start, p - start)
+      if (uint16(b, p) != (crc.getValue & 0xffff).toInt)
+        throw new ZipException("Corrupt GZIP header")
+      p += 2
+    }
+    p
+  }
+
+  /** One inflate call; zero output with the input used up means the
+    * deflate data is truncated. */
+  private def inflate(inf: Inflater, out: Array[Byte], off: Int, n: Int): Int = {
+    val got =
+      try inf.inflate(out, off, n)
+      catch { case e: DataFormatException => throw new ZipException(e.getMessage) }
+    if (got == 0 && !inf.finished()) {
+      if (inf.needsInput()) throw new EOFException("Unexpected end of ZLIB input stream")
+      if (inf.needsDictionary()) throw new ZipException("gzip member needs a preset dictionary")
+    }
+    got
+  }
+
+  private def uint16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+
+  private def uint32(b: Array[Byte], i: Int): Long =
+    (uint16(b, i) | (uint16(b, i + 2).toLong << 16)) & 0xffffffffL
 
   def decompress(gzipped: Array[Byte]): Array[Byte] =
     decompress(gzipped, Long.MaxValue)

@@ -2,6 +2,9 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -76,26 +79,6 @@ object TraceExport {
       (col("ts") + expr("INTERVAL 60 SECONDS")).as("endTime"),
       gzip_string(col("props")).as("traceData"))
 
-  /** The reference query: ids IN-list + closed startTime interval (both ends
-    * inclusive, END_TIME unconstrained — ParameterDataRepository.java:65-67),
-    * ORDER BY paramIndex, startTime, decompress payload to text.
-    *
-    * `maxPayloadBytes` (engine extension, default unbounded = reference
-    * parity) bounds each row's INFLATED size: the reference only ever
-    * inflates its own trusted writes (util/GzipUtil.java:19-31), but an
-    * export over third-party ingested traces must not let one hostile
-    * high-ratio payload kill an executor. Strict semantics, matching the
-    * reference's abort-on-corrupt policy: an over-budget row fails the
-    * export. */
-  /** The shared filter→decompress→project chain of every export variant —
-    * ONE definition, so a guard added to the flagship cannot drift out of
-    * the scale/streaming twins (the maxPayloadBytes bound had done
-    * exactly that). Time bounds enter as `LocalDateTime` literals
-    * (TimestampNTZType directly): a `java.sql.Timestamp` literal is an
-    * LTZ instant whose NTZ cast re-reads the wall clock through the
-    * SESSION timezone — with JVM default ≠ session tz the window would
-    * silently shift by the zone offset against the NTZ startTime column.
-    * `toLocalDateTime` keeps the caller's wall clock exactly. */
   /** The IN-list + closed time-range filter shared by every export
     * variant — ONE definition, so the variants cannot drift (the
     * maxPayloadBytes bound had drifted out of two of the three). Time
@@ -125,6 +108,17 @@ object TraceExport {
       col("endTime"),
       gunzip_string(col("traceData"), maxBytes = maxPayloadBytes).as("traceData"))
 
+  /** The reference query: ids IN-list + closed startTime interval (both ends
+    * inclusive, END_TIME unconstrained — ParameterDataRepository.java:65-67),
+    * ORDER BY paramIndex, startTime, decompress payload to text.
+    *
+    * `maxPayloadBytes` (engine extension, default unbounded = reference
+    * parity) bounds each row's INFLATED size: the reference only ever
+    * inflates its own trusted writes (util/GzipUtil.java:19-31), but an
+    * export over third-party ingested traces must not let one hostile
+    * high-ratio payload kill an executor. Strict semantics, matching the
+    * reference's abort-on-corrupt policy: an over-budget row fails the
+    * export. */
   def export(
       trace: DataFrame,
       ids: Seq[Long],
@@ -197,9 +191,22 @@ object TraceExport {
   def exportToParquet(result: DataFrame, path: String, singleFile: Boolean = false): Boolean = {
     val sink = if (singleFile) result.coalesce(1) else result
     sink.write.mode("overwrite").parquet(path)
-    // cheap emptiness check on the written artifact (no double compute of
-    // the full plan — a limit-1 probe of the written files)
-    !result.sparkSession.read.parquet(path).isEmpty
+    wroteRows(result.sparkSession, path)
+  }
+
+  /** True iff a part file the write left under `path` holds a row. Reads
+    * the row counts in the Parquet footers, stopping at the first
+    * non-zero one: no Spark job, no re-read of the data (the overwrite
+    * left only this write's files there). */
+  private def wroteRows(spark: SparkSession, path: String): Boolean = {
+    val dir = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .exists { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount > 0 finally reader.close()
+      }
   }
 
   /** Typed output row — the ParameterRecord Avro analog as a case class

@@ -1,6 +1,9 @@
 package graft.functions
 
-import org.apache.spark.SparkException
+import java.io.{ByteArrayInputStream, IOException}
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.zip.{CRC32, Deflater, GZIPInputStream}
+
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -9,6 +12,169 @@ import graft.SparkSpec
 
 class GzipSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The decoder the kernel must agree with. */
+  private def viaJdk(gz: Array[Byte]): Array[Byte] = {
+    val in = new GZIPInputStream(new ByteArrayInputStream(gz))
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** Seeded bytes that deflate to a few times smaller than they are. */
+  private def payload(n: Int, seed: Long): Array[Byte] = {
+    val alphabet = "abcdefgh{}\": ,0123456789"
+    val r = new scala.util.Random(seed)
+    Array.fill(n)(alphabet(r.nextInt(alphabet.length)).toByte)
+  }
+
+  private def rawDeflate(plain: Array[Byte]): Array[Byte] = {
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      d.setInput(plain)
+      d.finish()
+      val out = new java.io.ByteArrayOutputStream
+      val buf = new Array[Byte](4096)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
+
+  private def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => (v >>> (8 * i)).toByte)
+
+  /** A gzip member with the optional header fields named by `flags`
+    * (FHCRC=2, FEXTRA=4, FNAME=8, FCOMMENT=16). */
+  private def member(plain: Array[Byte], flags: Int, badHcrc: Boolean = false): Array[Byte] = {
+    var h = Array[Byte](0x1f, 0x8b.toByte, 8, flags.toByte, 1, 2, 3, 4, 0, 3)
+    if ((flags & 4) != 0) h = h ++ le(5, 2) ++ "xtra!".getBytes("UTF-8")
+    if ((flags & 8) != 0) h = h ++ "trace.json".getBytes("UTF-8") :+ 0.toByte
+    if ((flags & 16) != 0) h = h ++ "a comment".getBytes("UTF-8") :+ 0.toByte
+    if ((flags & 2) != 0) {
+      val c = new CRC32
+      c.update(h)
+      h = h ++ le((c.getValue & 0xffff) ^ (if (badHcrc) 1 else 0), 2)
+    }
+    val c = new CRC32
+    c.update(plain)
+    h ++ rawDeflate(plain) ++ le(c.getValue, 4) ++ le(plain.length.toLong, 4)
+  }
+
+  private def assertRejected(gz: Array[Byte], what: String): Unit = {
+    intercept[IOException](viaJdk(gz))
+    withClue(what) {
+      intercept[IOException](GzipCodec.decompress(gz))
+      assert(GzipCodec.decompressOrNull(gz) == null)
+      assert(GzipCodec.decompressToStringOrNull(gz) == null)
+    }
+  }
+
+  test("decoder conformance: same bytes as GZIPInputStream on every member shape") {
+    val sizes = Seq(0, 1, 8 * 1024 - 1, 8 * 1024, 8 * 1024 + 1, 1 << 20)
+    sizes.foreach { n =>
+      val plain = payload(n, n.toLong)
+      val gz = GzipCodec.compress(plain)
+      assert(viaJdk(gz).sameElements(plain), n)
+      assert(GzipCodec.decompress(gz).sameElements(plain), n)
+    }
+    val plain = payload(3000, 7L)
+    // every combination of the optional header fields
+    (0 until 32 by 2).foreach { flags =>
+      val gz = member(plain, flags)
+      assert(viaJdk(gz).sameElements(plain), flags)
+      assert(GzipCodec.decompress(gz).sameElements(plain), flags)
+    }
+    val second = payload(500, 8L)
+    val shapes = Seq(
+      "two members" -> (GzipCodec.compress(plain) ++ member(second, 30)),
+      "empty second member" -> (GzipCodec.compress(plain) ++ GzipCodec.compress(Array.emptyByteArray)),
+      "short trailing garbage" -> (GzipCodec.compress(plain) ++ Array.fill[Byte](7)(0x5a)),
+      "long trailing garbage" -> (GzipCodec.compress(plain) ++ payload(100, 9L)),
+      "garbage after two members" ->
+        (GzipCodec.compress(plain) ++ GzipCodec.compress(second) ++ payload(40, 10L)))
+    shapes.foreach { case (what, gz) =>
+      val expected = viaJdk(gz)
+      assert(GzipCodec.decompress(gz).sameElements(expected), what)
+    }
+    assert(GzipCodec.decompress(shapes.head._2).sameElements(plain ++ second))
+  }
+
+  test("decoder conformance: corrupt members throw (strict) or map to null (lenient)") {
+    val plain = payload(5000, 11L)
+    val gz = GzipCodec.compress(plain)
+    def patched(i: Int, f: Byte => Int): Array[Byte] = {
+      val b = gz.clone()
+      b(i) = f(b(i)).toByte
+      b
+    }
+    assertRejected(Array.emptyByteArray, "empty input")
+    assertRejected(patched(0, _ => 0x1e), "bad magic")
+    assertRejected(patched(2, _ => 7), "method != 8")
+    assertRejected(gz.take(gz.length / 2), "truncated deflate data")
+    assertRejected(gz.take(5), "truncated header")
+    assertRejected(gz.dropRight(3), "truncated trailer")
+    assertRejected(gz.dropRight(8), "missing trailer")
+    assertRejected(patched(gz.length - 8, b => b ^ 1), "wrong CRC-32")
+    assertRejected(patched(gz.length - 4, b => b ^ 1), "wrong ISIZE")
+    assertRejected(member(plain, 2, badHcrc = true), "corrupt FHCRC")
+    assertRejected(member(plain, 4).take(14), "FEXTRA past the end")
+    assertRejected(member(plain, 8).take(15), "unterminated FNAME")
+    assertRejected(patched(12, b => b ^ 0x40), "corrupt deflate data")
+    assertRejected(gz ++ GzipCodec.compress(plain).dropRight(4), "truncated second member")
+  }
+
+  test("per-thread state: a failed row does not poison the next; threads never share output") {
+    val good = payload(20000, 12L)
+    val goodGz = GzipCodec.compress(good)
+    val corrupt = goodGz.take(goodGz.length / 2)
+    assert(GzipCodec.decompressOrNull(corrupt) == null)
+    assert(GzipCodec.decompress(goodGz).sameElements(good))
+    intercept[IOException](GzipCodec.decompress(goodGz, 100L))
+    assert(GzipCodec.decompress(goodGz).sameElements(good))
+
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val jobs = (0 until 8).map { t =>
+        pool.submit(new Callable[Boolean] {
+          def call(): Boolean = {
+            val plains = (0 until 4).map(i => payload(100 + 7000 * i + t, t * 10L + i))
+            val gzs = plains.map(GzipCodec.compress)
+            (0 until 200).forall { k =>
+              val i = k % plains.size
+              GzipCodec.decompress(gzs(i)).sameElements(plains(i))
+            }
+          }
+        })
+      }
+      assert(jobs.forall(_.get(60, TimeUnit.SECONDS)))
+    } finally pool.shutdownNow()
+  }
+
+  test("per-thread output buffer shrinks back to its cap after an oversized row") {
+    val big = new Array[Byte](8 * 1024 * 1024)
+    big(12345) = 1
+    assert(GzipCodec.decompress(GzipCodec.compress(big)).sameElements(big))
+    assert(GzipCodec.retainedBufferCapacity == GzipCodec.RetainedBufferSize)
+    // also after a row that failed partway through growing
+    intercept[IOException](GzipCodec.decompress(GzipCodec.compress(big), 1L << 20))
+    assert(GzipCodec.retainedBufferCapacity == GzipCodec.RetainedBufferSize)
+  }
+
+  test("maxBytes boundary: exactly maxBytes inflates, one byte more is over budget") {
+    // 8 KiB fills the retained buffer exactly; 100 KiB grows it first
+    Seq(GzipCodec.RetainedBufferSize, 1, 100 * 1024).foreach { n =>
+      val plain = payload(n, n.toLong)
+      val gz = GzipCodec.compress(plain)
+      assert(GzipCodec.decompress(gz, n.toLong).sameElements(plain), n)
+      assert(GzipCodec.decompressToString(gz, n.toLong).numBytes() == n, n)
+      intercept[IOException](GzipCodec.decompress(gz, n - 1L))
+      assert(GzipCodec.decompressOrNull(gz, n - 1L) == null, n)
+      assert(GzipCodec.decompressToStringOrNull(gz, n - 1L) == null, n)
+    }
+    val empty = GzipCodec.compress(Array.emptyByteArray)
+    assert(GzipCodec.decompress(empty, 0L).isEmpty)
+    // the bound counts every member's output together
+    val two = GzipCodec.compress(payload(600, 1L)) ++ GzipCodec.compress(payload(600, 2L))
+    assert(GzipCodec.decompress(two, 1200L).length == 1200)
+    assert(GzipCodec.decompressOrNull(two, 1199L) == null)
+  }
 
   test("codec round-trip: decompress(compress(s)) == s (property, 100 samples)") {
     val gen = Gen.stringOf(Gen.frequency(8 -> Gen.asciiPrintableChar, 2 -> Gen.alphaNumChar))
