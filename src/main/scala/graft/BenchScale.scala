@@ -481,6 +481,14 @@ object BenchScale {
         .groupBy(lit(1).as("g")).agg(count(lit(1)).as("n"))
     }))
 
+  /** CPU per OUTPUT row at x10 over x1: (c10/r10)/(c1/r1) = cpuRatio ·
+    * r1/r10, rows being deterministic per scale. None when either scale
+    * produced no rows — a per-row ratio over an empty output measures
+    * nothing, so the `answer` gate must fail on it, not pass on a zero. */
+  private[graft] def perRowRatio(
+      cpuRatio: Double, r1: Long, r10: Long): Option[Double] =
+    if (r1 <= 0L || r10 <= 0L) None else Some(cpuRatio * r1.toDouble / r10)
+
   private def writeCorpus(
       spark: SparkSession, srcSf: String, outDir: String, copies: Int): Unit = {
     val docs = graft.sources.Tables.documents(spark, srcSf)
@@ -679,7 +687,7 @@ object BenchScale {
       // re-imported exactly the bias the r15 note documents (the x1
       // fixed-cost-dominated min drops faster as sweeps grow,
       // systematically inflating the ratio).
-      val perRowRatio = cpuRatio * (r1.toDouble / math.max(r10, 1L))
+      val prr = perRowRatio(cpuRatio, r1, r10)
       val budgetRatio =
         if (cls == "answer") math.max(r10.toDouble / math.max(r1, 1L), 10.0)
         else 10.0
@@ -700,9 +708,12 @@ object BenchScale {
       val slack =
         if (cls == "composite") 2.0 else if (cls == "linear") 1.6 else 1.3 // stage
       val pass =
-        if (cls == "answer") perRowRatio <= 1.6
+        if (cls == "answer") prr.exists(_ <= 1.6)
         else cpuRatio <= slack * budgetRatio
-      (name, cls, c1, c10, r1, r10, cpuRatio, exponent, perRowRatio, pass)
+      if (cls == "answer" && prr.isEmpty)
+        System.err.println(s"[bench-scale] $name has no output rows " +
+          s"(x1=$r1, x10=$r10): its per-row answer gate has no data and FAILS")
+      (name, cls, c1, c10, r1, r10, cpuRatio, exponent, prr, pass)
     }
     // ROOT-locale rendering (the f interpolator honors the JVM default
     // locale, which could emit ',' decimals — same guard as Bench)
@@ -710,8 +721,10 @@ object BenchScale {
       String.format(java.util.Locale.ROOT,
         "    \"%s\": {\"class\": \"%s\", \"cpu_x1\": %.3f, \"cpu_x10\": %.3f, " +
           "\"rows_x1\": %d, \"rows_x10\": %d, \"cpu_ratio\": %.2f, " +
-          "\"exponent\": %.3f, \"per_row_ratio\": %.3f, \"repeats\": %d, \"pass\": %b}",
-        name, cls, c1, c10, r1, r10, ratio, exp, prr,
+          "\"exponent\": %.3f, \"per_row_ratio\": %s, \"repeats\": %d, \"pass\": %b}",
+        name, cls, c1, c10, r1, r10, ratio, exp,
+        prr.map(v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
+          .getOrElse("null"),
         Int.box(repeats(name)), pass)
     }.mkString("{\n  \"src\": \"" + srcSf + "\", \"sweeps\": " + sweeps +
       // measurement-protocol record (r14 verdict: the artifact must say

@@ -251,6 +251,33 @@ object PipelineQueries extends QueryFamily {
     (roll, roll.agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0))
   }
 
+  /** The corpus front v11, v12 and v13 share: the multilingual column,
+    * UNICODE exact-substring span removal (n = 4, keep-first), the
+    * `n_tokens - n_removed >= 5` content gate on the surviving tokens,
+    * then min-id exact dedup on the md5 of the cleaned text —
+    * scope-cached `(doc_id, ld)` survivors. */
+  private def corpusSurvivors(spark: SparkSession, dir: String): DataFrame = {
+    val mdocs = ExtensionQueries.withMixedText(
+      Tables.documents(spark, dir), full = false)
+    val span = Ngrams.removeDuplicateSpans(
+      mdocs, "doc_id", "mtext", n = 4, unicode = true)
+    val gated = span.filter(col("n_tokens") - col("n_removed") >= 5)
+      .select(col("doc_id"), md5(col("text_clean")).as("ld"))
+    graft.CacheScope.scoped(Dedup.exactByKey(gated, Seq("ld"), "doc_id"))
+  }
+
+  /** The `(doc_id, ld)` schema of the v11–v13 store tables. */
+  private val CorpusStoreSchema = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    StructType(Seq(
+      StructField("doc_id", LongType), StructField("ld", StringType)))
+  }
+
+  /** Half the largest `doc_id`: where v11 and v13 split their appends. */
+  private def midDocId(spark: SparkSession, dir: String): Long =
+    Tables.documents(spark, dir)
+      .agg(max(col("doc_id"))).collect().head.getLong(0) / 2L
+
   def pipelineCorpusV9(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{NearDupIndex, Sampling}
     val idx = graft.TmpCleanup.perProcessDir("graft-v9-idx", dir)
@@ -435,19 +462,10 @@ object PipelineQueries extends QueryFamily {
     val out = graft.TmpCleanup.perProcessDir("graft-v11-store", dir)
     graft.TmpCleanup.register(out)
     graft.TmpCleanup.wipe(out)
-    val mdocs = ExtensionQueries.withMixedText(
-      Tables.documents(spark, dir), full = false)
-    val span = Ngrams.removeDuplicateSpans(
-      mdocs, "doc_id", "mtext", n = 4, unicode = true)
-    val gated = span.filter(col("n_tokens") - col("n_removed") >= 5)
-      .select(col("doc_id"), md5(col("text_clean")).as("ld"))
-    val sur = graft.CacheScope.scoped(Dedup.exactByKey(gated, Seq("ld"), "doc_id"))
+    val sur = corpusSurvivors(spark, dir)
     // durable store: range-split stats appends + range-layout compaction
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ld", StringType)))
-    val mid = Tables.documents(spark, dir)
-      .agg(max(col("doc_id"))).collect().head.getLong(0) / 2L
+    val schema = CorpusStoreSchema
+    val mid = midDocId(spark, dir)
     def append(half: DataFrame): Unit =
       half.write.format("graft.sources.v2.ShardSink")
         .option("path", out).option("statsColumn", "doc_id")
@@ -499,16 +517,8 @@ object PipelineQueries extends QueryFamily {
     val out = graft.TmpCleanup.perProcessDir("graft-v12-store", dir)
     graft.TmpCleanup.register(out)
     graft.TmpCleanup.wipe(out)
-    val mdocs = ExtensionQueries.withMixedText(
-      Tables.documents(spark, dir), full = false)
-    val span = Ngrams.removeDuplicateSpans(
-      mdocs, "doc_id", "mtext", n = 4, unicode = true)
-    val gated = span.filter(col("n_tokens") - col("n_removed") >= 5)
-      .select(col("doc_id"), md5(col("text_clean")).as("ld"))
-    val sur = graft.CacheScope.scoped(Dedup.exactByKey(gated, Seq("ld"), "doc_id"))
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ld", StringType)))
+    val sur = corpusSurvivors(spark, dir)
+    val schema = CorpusStoreSchema
     def append(half: DataFrame): Unit =
       half.write.format("graft.sources.v2.ShardSink")
         .option("path", out)
@@ -593,18 +603,9 @@ object PipelineQueries extends QueryFamily {
     val out = graft.TmpCleanup.perProcessDir("graft-v13-store", dir)
     graft.TmpCleanup.register(out)
     graft.TmpCleanup.wipe(out)
-    val mdocs = ExtensionQueries.withMixedText(
-      Tables.documents(spark, dir), full = false)
-    val span = Ngrams.removeDuplicateSpans(
-      mdocs, "doc_id", "mtext", n = 4, unicode = true)
-    val gated = span.filter(col("n_tokens") - col("n_removed") >= 5)
-      .select(col("doc_id"), md5(col("text_clean")).as("ld"))
-    val sur = graft.CacheScope.scoped(Dedup.exactByKey(gated, Seq("ld"), "doc_id"))
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ld", StringType)))
-    val mid = Tables.documents(spark, dir)
-      .agg(max(col("doc_id"))).collect().head.getLong(0) / 2L
+    val sur = corpusSurvivors(spark, dir)
+    val schema = CorpusStoreSchema
+    val mid = midDocId(spark, dir)
     def append(half: DataFrame): Unit =
       half.write.format("graft.sources.v2.ShardSink")
         .option("path", out)

@@ -1,10 +1,9 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -91,6 +90,11 @@ private[graft] object ShardBloom {
       mBits: Int,
       kHashes: Int,
       filters: Map[String, Option[Array[Byte]]])
+      extends ShardSection[Bloom] {
+    def merged(keep: String => Boolean, fresh: Option[Bloom]): Bloom =
+      copy(filters = filters.filter(e => keep(e._1)) ++ fresh.fold(
+        Map.empty[String, Option[Array[Byte]]])(_.filters))
+  }
 
   /** The bloom tag for a column type; None = unsupported (boolean has a
     * two-value domain — a bloom is meaningless). Tags are the EXACT
@@ -189,13 +193,6 @@ private[graft] object ShardBloom {
     sections.map(serialize).mkString
   }
 
-  def parse(text: String, where: Path): Bloom = {
-    val all = parseAll(text, where)
-    require(all.size == 1,
-      s"expected a single bloom section in $where, found ${all.size}")
-    all.head
-  }
-
   def parseAll(text: String, where: Path): Seq[Bloom] = {
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
     require(lines.nonEmpty && lines.head.startsWith("#key\t"),
@@ -250,15 +247,7 @@ private[graft] object ShardBloom {
   /** All sections of the sidecar (empty when absent). */
   def readAll(fs: FileSystem, dir: Path): Seq[Bloom] = {
     val p = bloomPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      parseAll(text, p)
-    }
+    ShardFiles.readIfExists(fs, p).fold(Seq.empty[Bloom])(parseAll(_, p))
   }
 
   /** The FIRST section — the whole sidecar on a single-column table.
@@ -266,49 +255,10 @@ private[graft] object ShardBloom {
   def readIfExists(fs: FileSystem, dir: Path): Option[Bloom] =
     readAll(fs, dir).headOption
 
-  def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, b: Bloom): Unit =
-    writeAllAtomic(conf, fs, dir, Seq(b))
-
   def writeAllAtomic(
       conf: Configuration, fs: FileSystem, dir: Path,
-      sections: Seq[Bloom]): Unit = {
-    val p = bloomPath(dir)
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serializeAll(sections).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
-
-  /**
-   * Bloom-prune `manifested` down to the shards that might contain a
-   * key. Fully relational — the key frame is joined, never collected:
-   *
-   *  1. each key explodes into its (distinct) bit positions — k rows;
-   *  2. the driver-parsed filters explode into their SET-bit positions
-   *     (bounded by shards × min(m, k·keys-per-shard) — sidecar-sized,
-   *     already driver memory by the single-file metadata design);
-   *  3. an equi-join on position + a per-(key, shard) count: a shard is
-   *     a HIT for a key iff every one of the key's positions is set;
-   *  4. distinct hit shards collect (≤ shard count, never data).
-   *
-   * Shards without a `_BLOOM` entry stay candidates; all-null-key
-   * shards (`-`) can never satisfy an equality join and are pruned; an
-   * absent / differently-keyed / differently-typed sidecar returns
-   * `manifested` unchanged (the safe fallback direction).
-   */
-  def candidateShards(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark, readIfExists(fs, dir), keyType, keyCol, keys,
-      manifested)
+      sections: Seq[Bloom]): Unit =
+    ShardFiles.writeAtomic(conf, fs, bloomPath(dir), serializeAll(sections))
 
   /** Absolute driver budget for the relational prune's exploded set-bit
     * rows (≈ tens of MB of (name, pos) pairs): the saturation cutoff
@@ -367,7 +317,23 @@ private[graft] object ShardBloom {
     }
   }
 
-  /** Same prune over a PRE-PARSED sidecar (see [[ShardStats]]'s twin). */
+  /**
+   * Bloom-prune `manifested` down to the shards that might contain a
+   * key. Fully relational — the key frame is joined, never collected:
+   *
+   *  1. each key explodes into its (distinct) bit positions — k rows;
+   *  2. the driver-parsed filters explode into their SET-bit positions
+   *     (bounded by shards × min(m, k·keys-per-shard) — sidecar-sized,
+   *     already driver memory by the single-file metadata design);
+   *  3. an equi-join on position + a per-(key, shard) count: a shard is
+   *     a HIT for a key iff every one of the key's positions is set;
+   *  4. distinct hit shards collect (≤ shard count, never data).
+   *
+   * Shards without a `_BLOOM` entry stay candidates; all-null-key
+   * shards (`-`) can never satisfy an equality join and are pruned; an
+   * absent / differently-keyed / differently-typed sidecar returns
+   * `manifested` unchanged (the safe fallback direction).
+   */
   def candidateShards(
       spark: SparkSession,
       bloom: Option[Bloom],
@@ -460,21 +426,6 @@ private[graft] object ShardBloom {
 private[graft] object ShardPrune {
   def candidateShards(
       spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark,
-      ShardStats.readAll(fs, dir).find(_.column == keyCol),
-      ShardBloom.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keys, manifested)
-
-  /** Pre-parsed-sidecar form: one metadata read per mutation, not one
-    * per consumer. */
-  def candidateShards(
-      spark: SparkSession,
       stats: Option[ShardStats.Stats],
       bloom: Option[ShardBloom.Bloom],
       keyType: DataType,
@@ -492,19 +443,14 @@ private[graft] object ShardPrune {
     * for the whole prune (see [[ShardStats.candidateShardsLocal]] /
     * [[ShardBloom.candidateShardsLocal]]). */
   def candidateShardsLocal(
-      fs: FileSystem,
-      dir: Path,
+      stats: Option[ShardStats.Stats],
+      bloom: Option[ShardBloom.Bloom],
       keyType: DataType,
       keyCol: String,
       keyVals: Seq[Any],
-      manifested: Seq[String]): Seq[String] = {
-    val ranged = ShardStats.candidateShardsLocal(
-      ShardStats.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keyVals, manifested)
-    ShardBloom.candidateShardsLocal(
-      ShardBloom.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keyVals, ranged)
-  }
+      manifested: Seq[String]): Seq[String] =
+    ShardBloom.candidateShardsLocal(bloom, keyType, keyCol, keyVals,
+      ShardStats.candidateShardsLocal(stats, keyType, keyCol, keyVals, manifested))
 }
 
 /**

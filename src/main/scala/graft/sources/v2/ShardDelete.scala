@@ -1,8 +1,5 @@
 package graft.sources.v2
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -27,25 +24,13 @@ import org.apache.spark.sql.types.StructType
  * scan of every shard — correct, just un-pruned. Untouched shards keep
  * their manifest entries and are never read again.
  *
- * Crash safety is ENTIRELY the manifest contract, same four steps as
- * [[ShardCompact.compact]]:
- *
- *  1. survivors of the hit shards are rewritten through the sink's own
- *     two-phase commit into a scratch subdirectory (invisible);
- *  2. the new shards are renamed into the table directory (UUID names
- *     cannot collide) — still orphans;
- *  3. ONE atomic manifest publish switches readers from (all old
- *     shards) to (untouched old shards + rewritten shards);
- *  4. the replaced shards and scratch are deleted — best-effort
- *     cleanup of what are now orphans.
- *
- * A crash before (3) leaves the table untouched (the delete simply has
- * not happened; re-run to converge — scratch dirs are UUID-fresh, and
- * stale ones are invisible orphans). A crash after (3) leaves the
- * delete APPLIED with orphan data files at worst; a re-run then
- * matches nothing and is a no-op. Deleted rows remain on disk until
- * step (4) (and until a physical `fs.delete` completes) — a compliance
- * pipeline should verify cleanup, as with any copy-on-write store.
+ * The rewrite is the store's one copy-on-write commit
+ * ([[ShardRewrite.commit]], which states the crash contract): survivors
+ * of the hit shards are rewritten and ONE atomic manifest publish
+ * switches readers from (all old shards) to (untouched old shards +
+ * rewritten shards). A crash before the publish leaves the table
+ * untouched (re-run to converge); after it, the delete is APPLIED and a
+ * re-run matches nothing.
  *
  * Concurrency is the [[ShardLock]] structural guarantee (the sink's
  * commit takes the same lock, so even an append cannot interleave with
@@ -66,85 +51,21 @@ object ShardDelete {
       path: String,
       schema: StructType,
       keyCol: String,
-      keys: DataFrame): Seq[String] = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
-    val keyDf = keys.select(keys.columns.head).distinct()
-      .withColumnRenamed(keys.columns.head, "__k")
-    ShardPrune.candidateShards(spark, fs, dir,
-      schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
-  }
+      keys: DataFrame): Seq[String] =
+    ShardMeta.load(spark, path).candidates(spark, schema(keyCol).dataType,
+      keyCol, keys.select(keys.columns.head).distinct()
+        .withColumnRenamed(keys.columns.head, "__k"))
 
-  /** Rewrite the table's `_STATS` after a copy-on-write publish: every
-    * SECTION drops the replaced shards' entries and merges the fresh
-    * shards' from the scratch write's matching section. No-op when the
-    * table has no stats. */
-  private def mergeStats(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path,
-      scratch: Path,
-      replaced: Set[String],
-      fresh: Seq[(String, Long)],
-      tableStats: Seq[ShardStats.Stats]): Unit = {
-    if (tableStats.isEmpty) return
-    val freshNames = fresh.map(_._1).toSet
-    val scratchSections = ShardStats.readAll(fs, scratch)
-    val merged = tableStats.map { s =>
-      val scratchRanges = scratchSections.find(_.column == s.column)
-        .map(_.ranges.view.filterKeys(freshNames.contains).toMap)
-        .getOrElse(Map.empty)
-      s.copy(ranges = (s.ranges -- replaced) ++ scratchRanges)
-    }
-    ShardStats.writeAllAtomic(
-      spark.sessionState.newHadoopConf(), fs, dir, merged)
-  }
-
-  /** Rewrite the table's `_BLOOM` after a copy-on-write publish —
-    * [[mergeStats]]'s twin, section for section. */
-  private def mergeBloom(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path,
-      scratch: Path,
-      replaced: Set[String],
-      fresh: Seq[(String, Long)],
-      tableBloom: Seq[ShardBloom.Bloom]): Unit = {
-    if (tableBloom.isEmpty) return
-    val freshNames = fresh.map(_._1).toSet
-    val scratchSections = ShardBloom.readAll(fs, scratch)
-    val merged = tableBloom.map { b =>
-      val scratchFilters = scratchSections.find(_.column == b.column)
-        .map(_.filters.view.filterKeys(freshNames.contains).toMap)
-        .getOrElse(Map.empty)
-      b.copy(filters = (b.filters -- replaced) ++ scratchFilters)
-    }
-    ShardBloom.writeAllAtomic(
-      spark.sessionState.newHadoopConf(), fs, dir, merged)
-  }
-
-  /** The scratch write, carrying the table's stats/bloom options (ALL
-    * sections — comma lists) and payload format through so rewritten
-    * shards stay prunable on every column and the table stays
-    * format-homogeneous. */
-  private def writeScratch(
-      df: DataFrame, scratch: Path, statsCols: Seq[String],
-      bloomMeta: Seq[(String, Int)] = Nil,
-      fmt: String = ShardPayload.Jsonl): Unit = {
-    val w0 = df.write.format("graft.sources.v2.ShardSink")
-      .option("path", scratch.toString).mode("append")
-      .option(ShardPayload.OptionKey, fmt)
-    val w1 =
-      if (statsCols.isEmpty) w0
-      else w0.option(ShardStats.OptionKey, statsCols.mkString(","))
-    (if (bloomMeta.isEmpty) w1
-     else w1.option(ShardBloom.OptionKey, bloomMeta.map(_._1).mkString(","))
-       .option(ShardBloom.BitsOptionKey,
-         bloomMeta.map(_._2.toString).mkString(","))).save()
+  /** The named shards' rows tagged with their shard name in `__shard`.
+    * Live merge-on-read tombstones apply BEFORE hit counting: rows a
+    * deferred delete already removed logically must neither count as
+    * hits nor be resurrected by the rewrite. */
+  private def tagged(spark: SparkSession, meta: ShardMeta, schema: StructType,
+      shards: Seq[String]): DataFrame = {
+    val t0 = ShardPayload.read(spark, schema, meta.fmt, meta.files(shards))
+      .withColumn("__shard", element_at(split(input_file_name(), "/"), -1))
+    meta.tombstones.fold(t0)(t =>
+      ShardTombstones.minus(spark, meta.dir, t0, t, Some("__shard")))
   }
 
   /**
@@ -165,91 +86,33 @@ object ShardDelete {
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
     ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
-    // ONE read per sidecar per operation (each readIfExists is a
-    // metadata round trip on an object store), threaded to every
-    // consumer below
-    val tableSchema = ShardSchema.readIfExists(fs, dir)
-    val tableStats = ShardStats.readAll(fs, dir)
-    val tableBloom = ShardBloom.readAll(fs, dir)
-    ShardSchema.requireCovers(tableSchema, dir, schema, "deleteByKey")
-    if (old.isEmpty) return 0L
+    val meta = ShardMeta.load(spark, path)
+    meta.requireCovers(schema, "deleteByKey")
+    if (meta.entries.isEmpty) return 0L
 
     val keyDf = keys.select(keys.columns.head).distinct()
       .withColumnRenamed(keys.columns.head, "__k")
     // manifest-level prune FIRST: shards whose stats range cannot hold
     // any key are never read (zero data I/O for them)
-    val candidates = ShardPrune.candidateShards(spark,
-      tableStats.find(_.column == keyCol), tableBloom.find(_.column == keyCol),
-      schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
+    val candidates = meta.candidates(spark, schema(keyCol).dataType, keyCol, keyDf)
     if (candidates.isEmpty) return 0L
-    val files = candidates.map(n => new Path(dir, n).toString)
-    val fmtD = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)
-    val tombs = ShardTombstones.readIfExists(fs, dir)
-    val tagged0 = ShardPayload.read(spark, schema, fmtD, files)
-      .withColumn("__shard", element_at(split(input_file_name(), "/"), -1))
-    // live merge-on-read tombstones apply BEFORE hit counting: rows a
-    // deferred delete already removed logically must neither count as
-    // deleted here nor be resurrected by the rewrite
-    val tagged = tombs.fold(tagged0)(t =>
-      ShardTombstones.minus(spark, dir, tagged0, t, Some("__shard")))
+    val rows = tagged(spark, meta, schema, candidates)
 
     // ONE pass over the CANDIDATES finds the hit shards and their
     // per-shard match counts — ≤ shard-count rows on the driver, bounded
     // by the table's file count, never its data
-    val hitCounts = tagged
-      .join(keyDf, tagged(keyCol) === col("__k"), "left_semi")
+    val hitCounts = rows
+      .join(keyDf, rows(keyCol) === col("__k"), "left_semi")
       .groupBy(col("__shard")).agg(count(lit(1)).as("__n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     if (hitCounts.isEmpty) return 0L
-    val deleted = hitCounts.values.sum
-    val statsCol = tableStats.map(_.column)
-    val bloomMeta = tableBloom.map(b => (b.column, b.mBits))
 
-    // (1) rewrite ONLY the hit shards' survivors, invisible scratch
-    val scratch = new Path(dir, s"_delete-${UUID.randomUUID().toString.take(8)}")
-    writeScratch(
-      tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
-        .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
-        .drop("__shard"),
-      scratch, statsCol, bloomMeta, fmtD)
-    val fresh = ShardManifest.read(fs, new Path(scratch, ShardManifest.FileName))
-      .filter(_._2 > 0L) // fully-deleted partitions leave empty shards behind
-
-    // (2) orphan-in the rewritten shards
-    fresh.foreach { case (name, _) =>
-      val src = new Path(scratch, name)
-      val dst = new Path(dir, name)
-      if (!fs.rename(src, dst) && !(fs.exists(dst) && !fs.exists(src)))
-        throw new java.io.IOException(s"delete rename failed: $src -> $dst")
-    }
-
-    // (3) the atomic switch: untouched shards keep their entries
-    val kept = old.filterNot { case (name, _) => hitCounts.contains(name) }
-    ShardManifest.writeAtomic(
-      spark.sessionState.newHadoopConf(), fs, mfPath, kept ++ fresh)
-    mergeStats(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableStats)
-    mergeBloom(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableBloom)
-    // rewritten shards had the live tombstones applied — their names
-    // leave every segment's scope (segments that empty are retired)
-    ShardTombstones.dropShards(
-      spark.sessionState.newHadoopConf(), fs, dir, hitCounts.keySet)
-
-    // (4) replaced shards are orphans now — best-effort cleanup, except
-    // shards a live snapshot pins (the [[ShardSnapshot]] time-travel
-    // view; compliance note there — a takedown's bytes survive until
-    // the pinning snapshots are dropped and vacuumed)
-    val keepDel = fresh.map(_._1).toSet ++ ShardSnapshot.pinned(spark, path)
-    hitCounts.keys.foreach { name =>
-      if (!keepDel.contains(name)) fs.delete(new Path(dir, name), false)
-    }
-    fs.delete(scratch, true)
-    deleted
+    // rewrite ONLY the hit shards' survivors
+    ShardRewrite.commit(spark, meta, "delete", hitCounts.keySet, Seq(
+      rows.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
+        .join(keyDf, rows(keyCol) === col("__k"), "left_anti")
+        .drop("__shard")))
+    hitCounts.values.sum
     }
   }
 
@@ -290,31 +153,25 @@ object ShardDelete {
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
     ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing has been committed there")
-    val old = ShardManifest.read(fs, mfPath)
-    ShardSchema.requireCovers(
-      ShardSchema.readIfExists(fs, dir), dir, schema, "deleteByKeyDeferred")
-    if (old.isEmpty) return 0L
+    val meta = ShardMeta.load(spark, path)
+    meta.requireCovers(schema, "deleteByKeyDeferred")
+    if (meta.entries.isEmpty) return 0L
     val keyType = schema(keyCol).dataType
     val tag = ShardSchema.tagOf(keyType)
-    val prior = ShardTombstones.readIfExists(fs, dir)
+    val prior = meta.tombstones
     prior.foreach(t => require(t.column == keyCol && t.tag == tag,
       s"table at $path already carries tombstones on '${t.column}' " +
         s"(${t.tag}); compact to materialize them before deferring " +
         s"deletes on '$keyCol' ($tag)"))
-    ShardTombstones.writeSegment(spark, fs, dir, keyCol, keyType, keys) match {
+    ShardTombstones.writeSegment(
+        spark, meta.fs, meta.dir, keyCol, keyType, keys) match {
       case None => 0L
       case Some((file, n)) =>
-        val seg = ShardTombstones.Segment(file, n, old.map(_._1).toSet)
+        val seg = ShardTombstones.Segment(file, n, meta.names.toSet)
         val merged = prior
           .map(t => t.copy(segments = t.segments :+ seg))
           .getOrElse(ShardTombstones.Tombstones(keyCol, tag, Seq(seg)))
-        ShardTombstones.writeAtomic(
-          spark.sessionState.newHadoopConf(), fs, dir, merged)
+        ShardTombstones.writeAtomic(meta.conf, meta.fs, meta.dir, merged)
         n
     }
     }
@@ -325,11 +182,10 @@ object ShardDelete {
    * pair ([[deleteByKey]]): every existing row whose `keyCol` matches an
    * update row's key is replaced, update rows with a new key are
    * inserted, and ONE atomic manifest publish switches readers to the
-   * post-upsert table — the MERGE INTO of the shard store, under the
-   * same four-step crash contract (a crash before the publish leaves the
-   * table untouched; after it, the upsert is applied with orphan files
-   * at worst, and a re-run converges: the same updates then replace
-   * their own prior values).
+   * post-upsert table — the MERGE INTO of the shard store, committed
+   * by [[ShardRewrite.commit]] (a crash before the publish leaves the
+   * table untouched; after it, the upsert is applied and a re-run
+   * converges: the same updates then replace their own prior values).
    *
    * `updates` carries the FULL table schema and must be key-unique
    * (checked — two update rows for one key have no deterministic
@@ -357,16 +213,8 @@ object ShardDelete {
       s"updates must carry the table schema ${schema.fieldNames.mkString(",")}" +
         s" in order, got ${updates.columns.mkString(",")}")
     ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
-    val tableSchema = ShardSchema.readIfExists(fs, dir)
-    val tableStats = ShardStats.readAll(fs, dir)
-    val tableBloom = ShardBloom.readAll(fs, dir)
-    ShardSchema.requireCovers(tableSchema, dir, schema, "upsertByKey")
+    val meta = ShardMeta.load(spark, path)
+    meta.requireCovers(schema, "upsertByKey")
 
     // updates feed four consumers (uniqueness gate, count, hit scan,
     // write) — scope-cached so the caller's plan runs once
@@ -389,78 +237,33 @@ object ShardDelete {
     // manifest-level prune, then ONE pass over the candidates feeds the
     // rollup below — per-shard hit counts and the matched-key count come
     // out of the same action
-    val candidates = ShardPrune.candidateShards(spark,
-      tableStats.find(_.column == keyCol), tableBloom.find(_.column == keyCol),
-      schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
-    val files = candidates.map(n => new Path(dir, n).toString)
-    val fmtU = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)
-    val tombsU = ShardTombstones.readIfExists(fs, dir)
-    val tagged = if (files.isEmpty) null
-      else {
-        val t0 = ShardPayload.read(spark, schema, fmtU, files)
-          .withColumn("__shard", element_at(split(input_file_name(), "/"), -1))
-        // tombstones apply before hit counting (deleteByKey's rationale);
-        // the upsert's own NEW rows land in fresh shards outside every
-        // segment's scope, so re-inserting a tombstoned key just works
-        tombsU.fold(t0)(t =>
-          ShardTombstones.minus(spark, dir, t0, t, Some("__shard")))
-      }
+    val candidates = meta.candidates(spark, schema(keyCol).dataType, keyCol, keyDf)
+    // the upsert's own NEW rows land in fresh shards outside every
+    // tombstone segment's scope, so re-inserting a tombstoned key just works
+    val rows = if (candidates.isEmpty) null
+      else tagged(spark, meta, schema, candidates)
     // per-shard hit counts AND the global matched-key count in ONE
     // rollup action (r19): the grand-total row carries the global
     // countDistinct, the per-shard rows the counts — replacing two
     // actions over a scope-cached hit set with one uncached pass
-    val hitAgg = if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else tagged.join(keyDf, tagged(keyCol) === col("__k"), "left_semi")
+    val hitAgg = if (rows == null) Array.empty[org.apache.spark.sql.Row]
+      else rows.join(keyDf, rows(keyCol) === col("__k"), "left_semi")
         .select(col("__shard"), col(keyCol).as("__key"))
         .rollup(col("__shard"))
         .agg(count(lit(1)).as("__n"), countDistinct(col("__key")).as("__d"))
         .collect()
     val hitCounts = hitAgg.filter(!_.isNullAt(0))
       .map(r => (r.getString(0), r.getLong(1))).toMap
-    val replaced = hitCounts.values.sum
     val matchedKeys = hitAgg.find(_.isNullAt(0)).map(_.getLong(2)).getOrElse(0L)
-    val statsCol = tableStats.map(_.column)
-    val bloomMeta = tableBloom.map(b => (b.column, b.mBits))
 
-    // (1) survivors of the hit shards + ALL update rows, rewritten
-    // through the sink's own two-phase commit into invisible scratch
-    // (two appends — the sink's manifest read-merge-write unions them)
-    val scratch = new Path(dir, s"_upsert-${UUID.randomUUID().toString.take(8)}")
-    if (hitCounts.nonEmpty)
-      writeScratch(
-        tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
-          .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
-          .drop("__shard"),
-        scratch, statsCol, bloomMeta, fmtU)
-    writeScratch(up, scratch, statsCol, bloomMeta, fmtU)
-    val fresh = ShardManifest.read(fs, new Path(scratch, ShardManifest.FileName))
-      .filter(_._2 > 0L)
-
-    // (2) orphan-in the rewritten + inserted shards
-    fresh.foreach { case (name, _) =>
-      val src = new Path(scratch, name)
-      val dst = new Path(dir, name)
-      if (!fs.rename(src, dst) && !(fs.exists(dst) && !fs.exists(src)))
-        throw new java.io.IOException(s"upsert rename failed: $src -> $dst")
-    }
-
-    // (3) the atomic switch: untouched shards keep their entries
-    val kept = old.filterNot { case (name, _) => hitCounts.contains(name) }
-    ShardManifest.writeAtomic(
-      spark.sessionState.newHadoopConf(), fs, mfPath, kept ++ fresh)
-    mergeStats(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableStats)
-    mergeBloom(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableBloom)
-    ShardTombstones.dropShards(
-      spark.sessionState.newHadoopConf(), fs, dir, hitCounts.keySet)
-
-    // (4) replaced shards are orphans now — best-effort cleanup, except
-    // snapshot-pinned shards (see [[ShardSnapshot]])
-    val keepUp = fresh.map(_._1).toSet ++ ShardSnapshot.pinned(spark, path)
-    hitCounts.keys.foreach { name =>
-      if (!keepUp.contains(name)) fs.delete(new Path(dir, name), false)
-    }
-    fs.delete(scratch, true)
-    (replaced, nUpdates - matchedKeys)
+    // survivors of the hit shards + ALL update rows
+    val survivors =
+      if (hitCounts.isEmpty) Nil
+      else Seq(rows.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
+        .join(keyDf, rows(keyCol) === col("__k"), "left_anti")
+        .drop("__shard"))
+    ShardRewrite.commit(spark, meta, "upsert", hitCounts.keySet, survivors :+ up)
+    (hitCounts.values.sum, nUpdates - matchedKeys)
     }
   }
 }

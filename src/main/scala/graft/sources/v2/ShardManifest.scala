@@ -1,9 +1,7 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
  * THE parser/serializer for `_MANIFEST` (one `name\trows` line per
@@ -41,25 +39,16 @@ private[v2] object ShardManifest {
     entries.map { case (name, rows) => s"$name\t$rows" }
       .mkString("", "\n", if (entries.isEmpty) "" else "\n")
 
-  def read(fs: FileSystem, mfPath: Path): Seq[(String, Long)] = {
-    val in = fs.open(mfPath)
-    val text = try {
-      new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-    } finally in.close()
-    parse(text, mfPath)
-  }
+  def read(fs: FileSystem, mfPath: Path): Seq[(String, Long)] =
+    parse(ShardFiles.read(fs, mfPath), mfPath)
+
+  def readIfExists(fs: FileSystem, mfPath: Path): Option[Seq[(String, Long)]] =
+    ShardFiles.readIfExists(fs, mfPath).map(parse(_, mfPath))
 
   def writeAtomic(
       conf: Configuration,
       fs: FileSystem,
       mfPath: Path,
-      entries: Seq[(String, Long)]): Unit = {
-    val tmp = new Path(mfPath.getParent, s"${FileName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serialize(entries).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(mfPath.toUri, conf)
-      .rename(tmp, mfPath, Options.Rename.OVERWRITE)
-  }
+      entries: Seq[(String, Long)]): Unit =
+    ShardFiles.writeAtomic(conf, fs, mfPath, serialize(entries))
 }

@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -27,35 +25,28 @@ import org.apache.spark.sql.types.StructType
  */
 object ShardReader {
 
-  private def manifestEntries(
-      spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing has been committed there")
-    ShardManifest.read(fs, mfPath)
-  }
-
   /** Read exactly the manifested shards under `path` with the given
     * schema (JSONL shards carry no embedded schema; the writer's schema
     * is the contract, same as any warehouse table). Live merge-on-read
     * tombstones ([[ShardTombstones]], published by
     * [[ShardDelete.deleteByKeyDeferred]]) are anti-joined out — zero
     * overhead when none are live. */
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    // _TOMBSTONES BEFORE _MANIFEST (r18 ADVICE): the non-atomic pair
-    // must never capture a pre-rewrite manifest with a post-dropShards
-    // sidecar (a pinned replaced shard would serve without its scope —
-    // silent key resurrection). Scopes only shrink, so the inverted
-    // skew is the safe direction. Same ordering as ShardScanMeta.load.
-    val tomb = ShardTombstones.readIfExists(fs, dir)
-    val files = manifestEntries(spark, path)
-      .map { case (name, _) => new Path(dir, name).toString }
-    val base = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir), files)
-    tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    read(spark, ShardMeta.load(spark, path), schema)
+
+  /** [[read]] over an already-loaded snapshot. */
+  private[v2] def read(
+      spark: SparkSession, meta: ShardMeta, schema: StructType): DataFrame =
+    scan(spark, meta, schema, meta.names)
+
+  /** The named shards' rows with the snapshot's live tombstones applied
+    * directly over the scan: the shard tag derives from
+    * `input_file_name()`, which only resolves below the first exchange. */
+  private def scan(spark: SparkSession, meta: ShardMeta, schema: StructType,
+      shards: Seq[String]): DataFrame = {
+    val base = ShardPayload.read(spark, schema, meta.fmt, meta.files(shards))
+    meta.tombstones.fold(base)(t =>
+      ShardTombstones.minus(spark, meta.dir, base, t, None))
   }
 
   /** The table's own authoritative schema (`_SCHEMA` sidecar, written
@@ -115,8 +106,6 @@ object ShardReader {
       s"key column '$keyCol' not in table schema ${schema.fieldNames.mkString(",")}")
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val keyType = schema(keyCol).dataType
     val rawKeys = keys.select(keys.columns.head).distinct()
       .withColumnRenamed(keys.columns.head, "__k")
@@ -134,39 +123,26 @@ object ShardReader {
           org.apache.spark.sql.functions.col("__k").cast(keyType).as("__kc"))
         .limit(maxPushKeys + 1).collect()
     val small = few != null && few.length <= maxPushKeys
-    // _TOMBSTONES before _MANIFEST — see read() for the skew argument
-    val tomb = ShardTombstones.readIfExists(fs, dir)
-    def screened(files: Seq[String]): DataFrame = {
-      val base = ShardPayload.read(
-        spark, schema, ShardPayload.of(fs, dir), files)
-      // tombstones directly over the scan: the shard tag derives from
-      // input_file_name(), which only resolves below the first exchange
-      tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
-    }
-    val names = manifestEntries(spark, path).map(_._1)
+    val meta = ShardMeta.load(spark, path)
     if (small) {
       val castVals = few.map(_.get(1)).filter(_ != null).distinct.toSeq
-      val candidates = ShardPrune.candidateShardsLocal(
-        fs, dir, keyType, keyCol, castVals, names)
+      val candidates = meta.candidatesLocal(keyType, keyCol, castVals)
       val lits = few.map(_.get(0)).filter(_ != null) // null never equals
       if (candidates.isEmpty || lits.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else {
-        val files = candidates.map(n => new Path(dir, n).toString)
-        val df = screened(files)
+        val df = scan(spark, meta, schema, candidates)
         df.filter(df(keyCol).isin(lits.toSeq: _*))
       }
     } else {
       val keyDf = graft.CacheScope.scoped(rawKeys)
-      val candidates = ShardPrune.candidateShards(spark, fs, dir,
-        keyType, keyCol, keyDf, names)
+      val candidates = meta.candidates(spark, keyType, keyCol, keyDf)
       if (candidates.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else {
-        val files = candidates.map(n => new Path(dir, n).toString)
-        val df = screened(files)
+        val df = scan(spark, meta, schema, candidates)
         df.join(keyDf,
           df(keyCol) === org.apache.spark.sql.functions.col("__k"),
           "left_semi")
@@ -177,10 +153,10 @@ object ShardReader {
   /** Total row count the manifest promises — compare with an actual
     * count to detect shard corruption without trusting the shards. */
   def manifestRowCount(spark: SparkSession, path: String): Long =
-    manifestEntries(spark, path).map(_._2).sum
+    ShardMeta.load(spark, path).entries.map(_._2).sum
 
   /** Number of shards the manifest currently publishes — the small-file
     * pressure gauge that decides when [[ShardCompact.compact]] is due. */
   def manifestShardCount(spark: SparkSession, path: String): Int =
-    manifestEntries(spark, path).size
+    ShardMeta.load(spark, path).entries.size
 }

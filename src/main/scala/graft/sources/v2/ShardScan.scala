@@ -88,7 +88,8 @@ private[v2] class ShardScanBuilder(path: String, tableSchema: StructType)
   // aggregate answer, the scan's planning and runtime re-pruning) —
   // on an object store each re-read is a metadata RPC, and planning
   // previously paid up to six of them
-  private lazy val meta: ShardScanMeta = ShardScanMeta.load(path)
+  private lazy val meta: ShardMeta =
+    ShardMeta.load(SparkSession.active, path, requireManifest = false)
   // COMPLETE aggregate pushdown answered from the METADATA PLANE: an
   // unfiltered, ungrouped COUNT(*) is the manifest's row-count sum and
   // MIN/MAX over a stats column folds the `_STATS` ranges — one sidecar
@@ -213,42 +214,6 @@ private[v2] class ShardScanBuilder(path: String, tableSchema: StructType)
   }
 }
 
-/** One parsed snapshot of the table's metadata plane, shared by every
-  * planning consumer of one query (driver-only, never serialized). */
-private[v2] final case class ShardScanMeta(
-    manifestExists: Boolean,
-    entries: Seq[(String, Long)],
-    stats: Seq[ShardStats.Stats],
-    bloom: Seq[ShardBloom.Bloom],
-    tombstones: Option[ShardTombstones.Tombstones],
-    fmt: String)
-
-private[v2] object ShardScanMeta {
-  def load(path: String): ShardScanMeta = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    // _TOMBSTONES is read BEFORE _MANIFEST (r18 ADVICE): the two reads
-    // are not atomic, and a reader racing a copy-on-write mutator that
-    // captured the PRE-rewrite manifest with the POST-dropShards
-    // sidecar could serve a snapshot-pinned replaced shard WITHOUT its
-    // tombstone scope — silently resurrecting deleted keys. Scopes only
-    // ever SHRINK, so the inverted skew (stale tombstones + fresh
-    // manifest) is safe: at worst a scope names a shard the manifest no
-    // longer lists, and the anti-join predicate matches nothing.
-    val tombstones = ShardTombstones.readIfExists(fs, dir)
-    val exists = fs.exists(mfPath)
-    ShardScanMeta(
-      manifestExists = exists,
-      entries = if (exists) ShardManifest.read(fs, mfPath) else Nil,
-      stats = ShardStats.readAll(fs, dir),
-      bloom = ShardBloom.readAll(fs, dir),
-      tombstones = tombstones,
-      fmt = ShardPayload.of(fs, dir))
-  }
-}
-
 /** The metadata-plane answer as a one-row scan: COUNT(*)/MIN/MAX folded
   * on the driver from `_MANIFEST`/`_STATS` at build time — zero data
   * files opened. */
@@ -289,7 +254,7 @@ private[v2] class ShardScanImpl(
     tableSchema: StructType,
     required: StructType,
     pushed: Array[Filter],
-    @transient meta: ShardScanMeta)
+    @transient meta: ShardMeta)
     extends Scan with Batch with SupportsRuntimeFiltering {
 
   @volatile private var runtime: Array[Filter] = Array.empty
@@ -310,7 +275,7 @@ private[v2] class ShardScanImpl(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val dir = new Path(path)
+    val dir = meta.dir
     require(meta.manifestExists,
       s"no ${ShardManifest.FileName} under $path — nothing has been committed there")
     val manifested = meta.entries.map(_._1)
@@ -320,10 +285,8 @@ private[v2] class ShardScanImpl(
     ShardScan.equalityValues((pushed ++ runtime).toSeq).foreach {
       case (colName, vals) =>
         tableSchema.fields.find(_.name == colName).foreach { f =>
-          candidates = ShardStats.candidateShardsLocal(
-            meta.stats.find(_.column == colName), f.dataType, colName, vals,
-            candidates)
-          candidates = ShardBloom.candidateShardsLocal(
+          candidates = ShardPrune.candidateShardsLocal(
+            meta.stats.find(_.column == colName),
             meta.bloom.find(_.column == colName), f.dataType, colName, vals,
             candidates)
         }

@@ -390,8 +390,7 @@ private[v2] class ShardBatchWrite(
     // the rows already durably committed and visible to readers (the
     // worst of both worlds).
     val mfPath = new Path(target, ShardManifest.FileName)
-    val prior: Seq[(String, Long)] =
-      if (f.exists(mfPath)) ShardManifest.read(f, mfPath) else Nil
+    val prior = ShardManifest.readIfExists(f, mfPath).getOrElse(Nil)
     // per-column sidecar compatibility (authoritative; plan time
     // re-checks best-effort): a column's stats dtype / bloom geometry
     // can never change; additional columns open new sections
@@ -458,74 +457,35 @@ private[v2] class ShardBatchWrite(
     val existing = prior.map(_._1).toSet
     val fresh = messages.toSeq.flatMap { case ShardCommit(staged, rows, _, _) =>
       val src = new Path(staged)
-      val dst = new Path(target, src.getName)
-      // A retried commit (or one resumed after a crash between the
-      // renames and the manifest write) finds src already moved: rename
-      // then returns false with dst present and src gone. That state IS
-      // the rename's postcondition — treat it as success so the retry
-      // reaches the manifest write and restores reader visibility,
-      // which is what makes the idempotency claim above actually hold.
-      if (!f.rename(src, dst) && !(f.exists(dst) && !f.exists(src)))
-        throw new java.io.IOException(s"commit rename failed: $src -> $dst")
+      // a retried commit finds its renames applied — see moveIn
+      ShardFiles.moveIn(f, src, new Path(target, src.getName), "commit")
       if (existing.contains(src.getName)) None else Some((src.getName, rows))
     }
     ShardManifest.writeAtomic(conf.value, f, mfPath, prior ++ fresh)
-    // stats AFTER the manifest: a crash between the two leaves fresh
-    // shards manifested but stats-less — they degrade to un-pruned scan
-    // candidates, never to a wrong prune. Per-COLUMN section merge:
-    // this append's columns merge their fresh entries into their own
-    // sections (created if new); every other section passes unchanged.
-    if (statsCols.nonEmpty) {
-      val freshNames = fresh.map(_._1).toSet
-      val merged = statsCols.zipWithIndex.foldLeft(priorStats) {
-        case (sections, ((colName, _, tag), i)) =>
-          val freshStats = messages.toSeq.flatMap {
-            case ShardCommit(staged, _, ranges, _) =>
-              val name = new Path(staged).getName
-              if (freshNames.contains(name)) Some(name -> ranges(i)) else None
-          }.toMap
-          // update IN PLACE — the first-ever-configured column must
-          // stay the FIRST section (the compaction layout axis); new
-          // sections append at the end
-          sections.find(_.column == colName) match {
-            case Some(prev) => sections.map(s =>
-              if (s.column == colName)
-                s.copy(ranges = prev.ranges ++ freshStats)
-              else s)
-            case None =>
-              sections :+ ShardStats.Stats(colName, tag, freshStats)
-          }
-      }
-      ShardStats.writeAllAtomic(conf.value, f, target, merged)
-    }
-    // bloom LAST, same hint-only crash ordering as the stats: a crash
-    // anywhere before this write leaves fresh shards manifested but
-    // bloom-less — un-pruned scan candidates, never a wrong prune
-    if (bloomCols.nonEmpty) {
-      val freshNames = fresh.map(_._1).toSet
-      val merged = bloomCols.zipWithIndex.foldLeft(priorBloom) {
-        case (sections, ((colName, _, tag, mBits), i)) =>
-          val freshBlooms = messages.toSeq.flatMap {
-            case ShardCommit(staged, _, _, blooms) =>
-              val name = new Path(staged).getName
-              if (freshNames.contains(name))
-                // empty = the writer's all-null-keys sentinel -> `-`
-                Some(name -> blooms(i).flatMap(b =>
-                  if (b.isEmpty) None else Some(b)))
-              else None
-          }.toMap
-          // in-place update, same section-order rationale as the stats
-          sections.find(_.column == colName) match {
-            case Some(prev) => sections.map(s =>
-              if (s.column == colName)
-                s.copy(filters = prev.filters ++ freshBlooms)
-              else s)
-            case None => sections :+ ShardBloom.Bloom(
-              colName, tag, mBits, ShardBloom.KHashes, freshBlooms)
-          }
-      }
-      ShardBloom.writeAllAtomic(conf.value, f, target, merged)
-    }
+    // sidecars AFTER the manifest, stats then bloom: a crash between
+    // the writes leaves fresh shards manifested but without entries —
+    // un-pruned scan candidates, never a wrong prune. Per-COLUMN section
+    // merge ([[ShardSection.merge]], nothing replaced): this append's
+    // columns add their fresh entries to their own sections (created at
+    // the end if new); every other section passes unchanged.
+    val freshNames = fresh.map(_._1).toSet
+    def freshEntries[V](of: ShardCommit => V): Map[String, V] =
+      messages.toSeq.collect { case m: ShardCommit
+        if freshNames.contains(new Path(m.stagedPath).getName) =>
+          new Path(m.stagedPath).getName -> of(m)
+      }.toMap
+    if (statsCols.nonEmpty)
+      ShardStats.writeAllAtomic(conf.value, f, target, ShardSection.merge(
+        priorStats, statsCols.zipWithIndex.map { case ((colName, _, tag), i) =>
+          ShardStats.Stats(colName, tag, freshEntries(_.statsRanges(i)))
+        }, _ => true))
+    if (bloomCols.nonEmpty)
+      ShardBloom.writeAllAtomic(conf.value, f, target, ShardSection.merge(
+        priorBloom, bloomCols.zipWithIndex.map { case ((colName, _, tag, mBits), i) =>
+          // empty = the writer's all-null-keys sentinel -> `-`
+          ShardBloom.Bloom(colName, tag, mBits, ShardBloom.KHashes,
+            freshEntries(_.blooms(i).filter(_.nonEmpty)))
+        }, _ => true))
     f.delete(stagingDir, true)
     }
   }

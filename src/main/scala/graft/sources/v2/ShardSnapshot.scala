@@ -51,13 +51,8 @@ object ShardSnapshot {
     (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
   }
 
-  private def readHwm(fs: FileSystem, dir: Path): Int = {
-    val p = new Path(dir, HwmFile)
-    if (!fs.exists(p)) 0
-    else scala.util.Using.resource(fs.open(p)) { in =>
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-    }
-  }
+  private def readHwm(fs: FileSystem, dir: Path): Int =
+    ShardFiles.readIfExists(fs, new Path(dir, HwmFile)).fold(0)(_.trim.toInt)
 
   /** The persistent version high-water mark (0 before the first
     * snapshot) — the "versions ≤ this existed before now" marker
@@ -86,40 +81,27 @@ object ShardSnapshot {
   def create(spark: SparkSession, path: String,
       leaseMs: Long = ShardLock.DefaultLeaseMs): Int =
     ShardLock.withLock(spark, path, leaseMs) {
-    val (fs, dir) = fsFor(spark, path)
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val entries = ShardManifest.read(fs, mfPath)
+    val meta = ShardMeta.load(spark, path)
+    val (fs, dir) = (meta.fs, meta.dir)
     // max(live) still participates: a pre-hwm table (or a hand-restored
     // snapshot file) must never be overwritten by a lower-counted hwm
     val v = (readHwm(fs, dir) +: 0 +: list(spark, path)).max + 1
     // hwm FIRST (staged rename, crash-safe): a crash between the two
     // writes burns a version number, never reuses one
-    val hwmTmp = new Path(dir, s"$HwmFile.tmp")
-    val hout = fs.create(hwmTmp, true)
-    try hout.write(v.toString.getBytes("UTF-8"))
-    finally hout.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dir.toUri, spark.sessionState.newHadoopConf())
-      .rename(hwmTmp, new Path(dir, HwmFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    ShardFiles.writeAtomic(meta.conf, fs, new Path(dir, HwmFile), v.toString)
     // live merge-on-read tombstones are PART of the snapshot's logical
     // content: record them (name + scope) as headers so this version
     // keeps excluding the deferred-deleted keys even after a compaction
     // has materialized and retired the segments ([[ShardTombstones]])
-    val tombHeader = ShardTombstones.readIfExists(fs, dir).map { t =>
+    val tombHeader = meta.tombstones.map { t =>
       s"#tombkey\t${t.column}\t${t.tag}\n" + t.segments.map(s =>
         s"#tomb\t${s.file}\t${s.nKeys}\t${s.shards.toSeq.sorted.mkString(",")}\n")
         .mkString
     }.getOrElse("")
-    val tmp = new Path(dir, s"$Prefix$v.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      (s"#ts\t${System.currentTimeMillis()}\n" + tombHeader +
-        ShardManifest.serialize(entries)).getBytes("UTF-8"))
-    finally out.close()
+    // a plain rename, never an overwrite: a published version is immutable
     val dst = new Path(dir, s"$Prefix$v")
+    val tmp = ShardFiles.stage(fs, dst, s"#ts\t${System.currentTimeMillis()}\n" +
+      tombHeader + ShardManifest.serialize(meta.entries))
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(s"snapshot publish failed: $tmp -> $dst")
     v
@@ -137,11 +119,8 @@ object ShardSnapshot {
   private def readSnapshotFile(fs: FileSystem, p: Path): (
       Option[Long], Seq[(String, Long)],
       Option[ShardTombstones.Tombstones]) = {
-    val in = fs.open(p)
-    val text = try {
-      new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    } finally in.close()
-    val (headers, body) = text.linesIterator.toSeq.partition(_.startsWith("#"))
+    val (headers, body) =
+      ShardFiles.read(fs, p).linesIterator.toSeq.partition(_.startsWith("#"))
     val ts = headers.collectFirst {
       case h if h.startsWith("#ts\t") => h.stripPrefix("#ts\t").trim.toLong
     }
@@ -202,8 +181,7 @@ object ShardSnapshot {
     * copy-on-write cleanup steps must not reclaim. Bounded by
     * snapshots × shards-per-snapshot manifest LINES, never data. */
   def pinned(spark: SparkSession, path: String): Set[String] =
-    list(spark, path).iterator
-      .flatMap(v => entries(spark, path, v).iterator.map(_._1)).toSet
+    pinnedAll(spark, path)._1
 
   /** Read the table AS OF snapshot `v`. Fails loud — not empty — when a
     * pinned shard has been vacuumed away (only possible after the
@@ -258,17 +236,14 @@ object ShardSnapshot {
   def vacuum(spark: SparkSession, path: String,
       leaseMs: Long = ShardLock.DefaultLeaseMs): Seq[String] =
     ShardLock.withLock(spark, path, leaseMs) {
-    val (fs, dir) = fsFor(spark, path)
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
+    val meta = ShardMeta.load(spark, path)
+    val (fs, dir) = (meta.fs, meta.dir)
     val (pinnedShards, pinnedTombs) = pinnedAll(spark, path)
-    val live = ShardManifest.read(fs, mfPath).map(_._1).toSet ++
-      pinnedShards ++
+    val live = meta.names.toSet ++ pinnedShards ++
       // tombstone segments stay while the live sidecar names them or a
       // snapshot records them (snapshot reads re-apply; see
       // [[ShardTombstones]]); retired, unrecorded ones reclaim here
-      ShardTombstones.liveSegmentFiles(fs, dir) ++
+      meta.tombstones.fold(Set.empty[String])(_.segments.map(_.file).toSet) ++
       pinnedTombs
     val candidates = fs.listStatus(dir).toSeq
       .filter(st => st.isFile)

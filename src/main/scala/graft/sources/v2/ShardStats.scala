@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
@@ -57,6 +57,11 @@ private[graft] object ShardStats {
       column: String,
       dtype: String,
       ranges: Map[String, Option[(String, String)]])
+      extends ShardSection[Stats] {
+    def merged(keep: String => Boolean, fresh: Option[Stats]): Stats =
+      copy(ranges = ranges.filter(e => keep(e._1)) ++ fresh.fold(
+        Map.empty[String, Option[(String, String)]])(_.ranges))
+  }
 
   /** The stats dtype tag for a column type; None = type unsupported for
     * stats (booleans have no useful range; everything else the sink can
@@ -99,13 +104,6 @@ private[graft] object ShardStats {
     sections.map(serialize).mkString
   }
 
-  def parse(text: String, where: Path): Stats = {
-    val all = parseAll(text, where)
-    require(all.size == 1,
-      s"expected a single stats section in $where, found ${all.size}")
-    all.head
-  }
-
   def parseAll(text: String, where: Path): Seq[Stats] = {
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
     require(lines.nonEmpty && lines.head.startsWith("#key\t"),
@@ -141,15 +139,7 @@ private[graft] object ShardStats {
   /** All sections of the sidecar (empty when absent). */
   def readAll(fs: FileSystem, dir: Path): Seq[Stats] = {
     val p = statsPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      parseAll(text, p)
-    }
+    ShardFiles.readIfExists(fs, p).fold(Seq.empty[Stats])(parseAll(_, p))
   }
 
   /** The FIRST section — the whole sidecar on a single-column table
@@ -159,44 +149,10 @@ private[graft] object ShardStats {
   def readIfExists(fs: FileSystem, dir: Path): Option[Stats] =
     readAll(fs, dir).headOption
 
-  def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, stats: Stats): Unit =
-    writeAllAtomic(conf, fs, dir, Seq(stats))
-
   def writeAllAtomic(
       conf: Configuration, fs: FileSystem, dir: Path,
-      sections: Seq[Stats]): Unit = {
-    val p = statsPath(dir)
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serializeAll(sections).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
-
-  /**
-   * The shard names a keyed operation must READ — the manifest-level
-   * prune. Shards with a stats range that no key can fall into are
-   * skipped without opening a file; shards without a stats entry (or
-   * when stats are absent / keyed on a different column / typed
-   * differently than the table schema says) stay candidates — the safe
-   * fallback direction. All-null-key shards (`-\t-`) can never satisfy
-   * an equality join and are always pruned.
-   *
-   * One pass over the key set against a BROADCAST ≤-file-count range
-   * table; the collect is bounded by the shard count, never the data.
-   */
-  def candidateShards(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark, readIfExists(fs, dir), keyType, keyCol, keys,
-      manifested)
+      sections: Seq[Stats]): Unit =
+    ShardFiles.writeAtomic(conf, fs, statsPath(dir), serializeAll(sections))
 
   /**
    * Driver-local range probe for an ALREADY-BOUNDED key set — the
@@ -255,9 +211,18 @@ private[graft] object ShardStats {
     }
   }
 
-  /** Same prune over PRE-PARSED stats — mutators that already read the
-    * sidecar (one read per operation, not one per consumer: each
-    * readIfExists is a metadata round trip on an object store). */
+  /**
+   * The shard names a keyed operation must READ — the manifest-level
+   * prune. Shards with a stats range that no key can fall into are
+   * skipped without opening a file; shards without a stats entry (or
+   * when stats are absent / keyed on a different column / typed
+   * differently than the table schema says) stay candidates — the safe
+   * fallback direction. All-null-key shards (`-\t-`) can never satisfy
+   * an equality join and are always pruned.
+   *
+   * One pass over the key set against a BROADCAST ≤-file-count range
+   * table; the collect is bounded by the shard count, never the data.
+   */
   def candidateShards(
       spark: SparkSession,
       stats: Option[Stats],

@@ -1,10 +1,9 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -118,30 +117,15 @@ object ShardTombstones {
 
   def readIfExists(fs: FileSystem, dir: Path): Option[Tombstones] = {
     val p = sidecarPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(parse(text, p))
-    }
+    ShardFiles.readIfExists(fs, p).map(parse(_, p))
   }
 
   def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, t: Tombstones): Unit = {
-    val p = sidecarPath(dir)
-    if (t.segments.isEmpty) { fs.delete(p, false); return } // clean table
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serialize(t).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      conf: Configuration, fs: FileSystem, dir: Path, t: Tombstones): Unit =
+    if (t.segments.isEmpty) fs.delete(sidecarPath(dir), false) // clean table
+    else ShardFiles.writeAtomic(conf, fs, sidecarPath(dir), serialize(t))
 
-  /** Live tombstone segment FILE names (for vacuum's live set). */
+  /** Live tombstone segment FILE names. */
   def liveSegmentFiles(fs: FileSystem, dir: Path): Set[String] =
     readIfExists(fs, dir).map(_.segments.map(_.file).toSet).getOrElse(Set.empty)
 
@@ -260,26 +244,19 @@ object ShardTombstones {
 
   // ---- maintenance-side scope remapping
 
-  /** Drop `replaced` shard names from every segment's scope (they were
-    * rewritten with tombstones applied); retire segments whose scope
-    * empties — their files become orphans for vacuum unless a snapshot
-    * pins them. Call under the table lock, after the manifest publish. */
-  private[v2] def dropShards(
+  /** Shrink every segment's scope to the `kept` shards — the others
+    * were rewritten with the tombstones applied (a compaction keeps none,
+    * so every segment retires) or are no longer manifested. Segments
+    * whose scope empties retire; their files become orphans for vacuum
+    * unless a snapshot pins them. Call under the table lock, after the
+    * manifest publish. */
+  private[v2] def keepScopes(
       conf: Configuration,
       fs: FileSystem,
       dir: Path,
-      replaced: Set[String]): Unit =
-    readIfExists(fs, dir).foreach { t =>
-      val remapped = t.segments
-        .map(s => s.copy(shards = s.shards -- replaced))
-        .filter(_.shards.nonEmpty)
-      writeAtomic(conf, fs, dir, t.copy(segments = remapped))
-    }
-
-  /** Retire EVERY segment — a compaction materialized them all. The
-    * files stay on disk for snapshot readers until vacuum. */
-  private[v2] def clearAll(
-      conf: Configuration, fs: FileSystem, dir: Path): Unit = {
-    fs.delete(sidecarPath(dir), false); ()
-  }
+      t: Tombstones,
+      kept: Set[String]): Unit =
+    writeAtomic(conf, fs, dir, t.copy(segments = t.segments
+      .map(s => s.copy(shards = s.shards.intersect(kept)))
+      .filter(_.shards.nonEmpty)))
 }

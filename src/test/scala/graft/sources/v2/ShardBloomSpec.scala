@@ -325,13 +325,10 @@ class ShardBloomSpec extends SparkSpec {
     val dirS = java.nio.file.Files.createTempDirectory("graft-bloom-locS").toString
     (0 until 8).foreach(s =>
       append(dirS, (s * 50 until (s + 1) * 50).map(i => row(i.toLong))))
-    val (fsS, pS) = fsDir(dirS)
-    val namesS = scala.io.Source.fromFile(s"$dirS/_MANIFEST").getLines()
-      .filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
+    val metaS = ShardMeta.load(spark, dirS)
     val keysS = Seq(row(60L)._1, row(310L)._1,
       org.apache.commons.codec.digest.DigestUtils.md5Hex("never-written"))
-    val rel = ShardPrune.candidateShards(spark, fsS, pS, StringType, "digest",
-      keysS.toDF("__k"), namesS)
+    val rel = metaS.candidates(spark, StringType, "digest", keysS.toDF("__k"))
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -341,8 +338,7 @@ class ShardBloomSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     val loc = try {
-      val r = ShardPrune.candidateShardsLocal(
-        fsS, pS, StringType, "digest", keysS, namesS)
+      val r = metaS.candidatesLocal(StringType, "digest", keysS)
       Thread.sleep(500) // listener bus is async; no-submission means no event
       r
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -360,14 +356,11 @@ class ShardBloomSpec extends SparkSpec {
     appendBoth((0L until 100L by 2).map(i => (i, s"even $i")))
     appendBoth((1L until 100L by 2).map(i => (i, s"odd $i")))
     appendBoth((1000L until 1050L).map(i => (i, s"far $i")))
-    val (fsL, pL) = fsDir(dirL)
-    val namesL = scala.io.Source.fromFile(s"$dirL/_MANIFEST").getLines()
-      .filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
+    val metaL = ShardMeta.load(spark, dirL)
     val keysL: Seq[Any] = Seq(42L, 9999L)
-    val relL = ShardPrune.candidateShards(spark, fsL, pL, LongType, "doc_id",
-      Seq(42L, 9999L).toDF("__k"), namesL)
-    val locL = ShardPrune.candidateShardsLocal(
-      fsL, pL, LongType, "doc_id", keysL, namesL)
+    val relL = metaL.candidates(spark, LongType, "doc_id",
+      Seq(42L, 9999L).toDF("__k"))
+    val locL = metaL.candidatesLocal(LongType, "doc_id", keysL)
     assert(locL.toSet == relL.toSet && locL.size == 1)
   }
 
